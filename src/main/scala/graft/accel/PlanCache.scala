@@ -2,7 +2,6 @@ package graft.accel
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
@@ -210,7 +209,7 @@ object PlanCache {
           val (qe, enc) = org.apache.spark.sql.graft.Bridge.planArtifact(df)
           cache.putIfAbsent(key, Entry(key,
             text.linesIterator.mkString(" ").take(200), qe, enc, pins,
-            tempViewIds(spark, text), epoch.get,
+            tempViewIds(spark, df.queryExecution.logical), epoch.get,
             new AtomicLong(0), now, new AtomicLong(now)))
           evictIfOver()
         } // else: pinned to a superseded snapshot (time travel) —
@@ -264,18 +263,15 @@ object PlanCache {
 
   /** Raw temp-view object identity for every relation name the statement
     * references — the live check that catches DataFrame-API
-    * `createOrReplaceTempView` (which never crosses this choke point). */
+    * `createOrReplaceTempView` (which never crosses this choke point).
+    * Reads the names off the plan `spark.sql` already parsed. */
   private def tempViewIds(spark: SparkSession,
-                          text: String): Seq[(Seq[String], Option[Int])] = {
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(text)
-      catch { case NonFatal(_) => return Nil }
+                          parsed: LogicalPlan): Seq[(Seq[String], Option[Int])] =
     (parsed +: parsed.subqueriesAll)
       .flatMap(_.collect { case u: UnresolvedRelation => u.multipartIdentifier })
       .distinct
       .filter(_.lengthCompare(2) <= 0)
       .map(parts => parts -> rawViewId(spark, parts))
-  }
 
   private def rawViewId(spark: SparkSession, parts: Seq[String]): Option[Int] = {
     val cat = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

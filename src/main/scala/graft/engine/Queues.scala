@@ -223,6 +223,23 @@ object Queues {
     df
   }
 
+  /** Release the slot [[admitLazy]] took for `df` once its result has been
+    * consumed without a Dataset action — an RDD-level stream such as
+    * Flight DoGet's `toArrowBatchRdd.toLocalIterator` fires no
+    * QueryExecutionListener event. Idempotent with the listener path; a
+    * no-op for a frame that was never admitted. */
+  def finished(df: DataFrame): Unit = {
+    val it = pendingLazy.iterator()
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.dfRef.get eq df) {
+        p.release()
+        df.sparkSession.listenerManager.unregister(p.listener)
+        it.remove()
+      }
+    }
+  }
+
   // ---- rule-based routing (reference `RuleBasedEngineSelector.java:22`:
   // ordered rules evaluated against the query context pick the target
   // engine; the OSS tree ships the seam — `resolveAndUpdateEngine` wired

@@ -216,20 +216,25 @@ object GraftFlightServer {
     * QueryExecutionListener never fires — the wire-first jobs service is
     * fed explicitly, EXCEPT for eager commands, which already executed
     * (and were listener-recorded) at submission: recording again here
-    * would double-count the statement in sys_queries. */
+    * would double-count the statement in sys_queries. For the same reason
+    * the WLM slot a routed statement holds is released here, when the
+    * stream completes, fails or is cancelled. */
   private def streamResult(df: DataFrame, action: String,
                            obs: StreamObserver[Array[Byte]]): Unit = {
-    val schema = org.apache.spark.sql.graft.Bridge.arrowSchema(df)
-    val t0 = System.nanoTime()
     val frames: Iterator[Array[Byte]] =
-      Iterator.single(Pb.writeFlightData(schemaHeaderBytes(schema),
-        Array.emptyByteArray)) ++
-        org.apache.spark.sql.graft.Bridge.arrowBatches(df).map { m =>
-          val (header, body) = splitIpcMessage(m)
-          Pb.writeFlightData(header, body)
-        }
-    streamFrames(frames, obs, onDone = () => {
-      if (!df.queryExecution.logical.isInstanceOf[
+      try {
+        val schema = org.apache.spark.sql.graft.Bridge.arrowSchema(df)
+        Iterator.single(Pb.writeFlightData(schemaHeaderBytes(schema),
+          Array.emptyByteArray)) ++
+          org.apache.spark.sql.graft.Bridge.arrowBatches(df).map { m =>
+            val (header, body) = splitIpcMessage(m)
+            Pb.writeFlightData(header, body)
+          }
+      } catch { case t: Throwable => graft.engine.Queues.finished(df); throw t }
+    val t0 = System.nanoTime()
+    streamFrames(frames, obs, onEnd = completed => {
+      graft.engine.Queues.finished(df)
+      if (completed && !df.queryExecution.logical.isInstanceOf[
           org.apache.spark.sql.catalyst.plans.logical.CommandResult])
         graft.catalog.QueryHistory.record(action, df.queryExecution,
           System.nanoTime() - t0, None)
@@ -249,32 +254,35 @@ object GraftFlightServer {
           val (header, body) = splitIpcMessage(m)
           Pb.writeFlightData(header, body)
         },
-      obs, onDone = () => ())
+      obs, onEnd = _ => ())
 
+  /** `onEnd` runs exactly once, before the client sees the end: with
+    * `true` when every frame was sent, `false` on failure or cancel. */
   private def streamFrames(frames: Iterator[Array[Byte]],
                            obs: StreamObserver[Array[Byte]],
-                           onDone: () => Unit): Unit = {
+                           onEnd: Boolean => Unit): Unit = {
     val sObs = obs.asInstanceOf[
       org.sparkproject.connect.grpc.stub.ServerCallStreamObserver[Array[Byte]]]
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def finish(): Unit = if (done.compareAndSet(false, true)) {
-      onDone()
-      obs.onCompleted()
+    def end(completed: Boolean): Boolean = {
+      val first = done.compareAndSet(false, true)
+      if (first) onEnd(completed)
+      first
     }
     val drain: Runnable = () => {
       try {
         if (!done.get()) {
           while (sObs.isReady && !sObs.isCancelled && frames.hasNext)
             sObs.onNext(frames.next())
-          if (sObs.isCancelled) done.set(true)
-          else if (!frames.hasNext) finish()
+          if (sObs.isCancelled) end(false)
+          else if (!frames.hasNext && end(true)) obs.onCompleted()
           // else: transport window closed — the onReady handler re-enters
         }
       } catch {
-        case t: Throwable => if (done.compareAndSet(false, true)) fail(obs, t)
+        case t: Throwable => if (end(false)) fail(obs, t)
       }
     }
-    sObs.setOnCancelHandler(new Runnable { def run(): Unit = done.set(true) })
+    sObs.setOnCancelHandler(new Runnable { def run(): Unit = end(false) })
     sObs.setOnReadyHandler(drain)
     drain.run()
   }

@@ -45,6 +45,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(session => new graft.plans.CategoricalSelectivity(session))
     e.injectOptimizerRule(session => new graft.plans.ApproxCountDistinct(session))
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    // generated code reads filter/project literals from its references,
+    // so statements differing only in a value reuse compiled classes
+    e.injectColumnar(_ => graft.plans.ParameterizeLiterals.columnarRule)
     // Lake metadata table functions — the reference's TABLE(table_files(..))
     // / table_history / table_snapshot family (dremio `TableMacroNames.java`,
     // `sys."tables"`): FROM-clause functions over the commit log, joinable

@@ -177,4 +177,24 @@ class GraftFlightServerSpec extends AnyFunSuite {
       spark.conf.unset(graft.auth.Privileges.UserConf)
     }
   }
+
+  test("a routed statement frees its WLM slot when its DoGet stream ends") {
+    assume(pyflight, "pyarrow.flight not available in this environment")
+    import graft.engine.Queues
+    // a DoGet streams through an RDD iterator, which fires no
+    // QueryExecutionListener: without the stream's own release, the second
+    // statement would wait out the 5 s admission timeout
+    Queues.define("flight_wlm", slots = 1, timeoutMs = 5000)
+    try {
+      spark.sql("CREATE ROUTING RULE flight_wlm_rule PRIORITY 1 " +
+        "WHEN statement LIKE '%flight_wlm_probe%' ROUTE TO flight_wlm")
+      for (i <- 1 to 3) {
+        val (_, out) = runClient(port.toString,
+          s"SELECT id * $i AS flight_wlm_probe FROM range(5)", "anon")
+        assert(out.contains("RESULT "), s"DoGet $i: ${out.take(400)}")
+      }
+      val st = Queues.status.find(_.name == "flight_wlm").get
+      assert(st.admitted == 3L && st.running == 0L && st.timedOut == 0L, st)
+    } finally { Queues.dropRule("flight_wlm_rule"); Queues.drop("flight_wlm") }
+  }
 }
